@@ -202,7 +202,7 @@ def main() -> None:
     probe_gate = float(os.environ.get("SPARK_GRAFT_CPU_PROBE_GATE", "0.6"))
     cpu_probe_start = cpu_probe()
     from calidad_del_aire_etl_spark import registry
-    from calidad_del_aire_etl_spark.session import get_session
+    from calidad_del_aire_etl_spark.session import get_session, host_cpus, host_driver_mem
 
     spark = get_session("bench")
     qs = registry.queries()
@@ -235,7 +235,7 @@ def main() -> None:
         yield from batches
 
     (
-        r.repartition(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+        r.repartition(int(host_cpus()))
         .mapInPandas(_noop_batches, "id long, k long, g long, x double")
         .write.format("noop").mode("overwrite").save()
     )
@@ -332,6 +332,8 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "cpus": host_cpus(),
+        "driver_mem": host_driver_mem(),
         "loadavg_start": loadavg_start,
         "loadavg_end": loadavg_end,
         "load_gate": load_gate,

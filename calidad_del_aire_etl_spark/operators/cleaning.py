@@ -117,7 +117,7 @@ def resample_spine_sql(
 
 def interpolate_linear(
     df: DataFrame,
-    value_col: str,
+    value_col: str | Sequence[str],
     group_cols: Sequence[str],
     order_cols: Sequence[str],
     limit: int = 3,
@@ -132,45 +132,53 @@ def interpolate_linear(
     is filled only if its distance from the previous non-NULL row is at
     most ``limit``.
 
-    Implementation: one shuffle on ``group_cols``; inside each partition
-    two ignore-nulls window scans (backward last, forward first) — no
-    Python, no iteration.
+    ``value_col`` is one column name or a sequence of them; every column
+    is filled in place by the same plan (``out_col`` renames the output
+    of a single column only).
+
+    Implementation: one shuffle on ``group_cols`` and one sort; inside
+    each partition ``row_number`` runs once, then each column takes its
+    previous and next non-NULL ``(value, position)`` pair as ONE struct
+    per direction (``last``/``first`` with ``ignorenulls``). All columns'
+    scans share one window node, so the plan stays two window passes
+    whatever the column count — no Python, no iteration.
     """
-    out_col = out_col or value_col
+    cols = [value_col] if isinstance(value_col, str) else list(value_col)
+    if out_col is not None and len(cols) != 1:
+        raise ValueError("out_col applies to a single value column")
     w = Window.partitionBy(*group_cols).orderBy(*order_cols)
-    val = F.col(value_col)
+    rn = F.col("__rn")
 
     # Stage 1: materialize row position (window args cannot nest windows).
-    staged = df.withColumn("__rn", F.row_number().over(w)).withColumn(
-        "__rn_nn", F.when(val.isNotNull(), F.col("__rn"))
-    )
+    staged = df.withColumn("__rn", F.row_number().over(w))
 
     # Second pass orders by the SAME keys as the row_number pass (row
     # order is identical to __rn order by construction), so the physical
     # plan keeps ONE sort: ordering by __rn instead made Spark re-sort
     # the already-sorted partition.
-    w_rn = Window.partitionBy(*group_cols).orderBy(*order_cols)
-    w_back = w_rn.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    w_fwd = w_rn.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-
-    prev_val = F.last(val, ignorenulls=True).over(w_back)
-    prev_rn = F.last(F.col("__rn_nn"), ignorenulls=True).over(w_back)
-    next_val = F.first(val, ignorenulls=True).over(w_fwd)
-    next_rn = F.first(F.col("__rn_nn"), ignorenulls=True).over(w_fwd)
-
-    rn = F.col("__rn")
-    filled = prev_val + (next_val - prev_val) * (
-        (rn - prev_rn).cast("double") / (next_rn - prev_rn).cast("double")
-    )
-    interp = F.when(val.isNotNull(), val).otherwise(
-        F.when(
-            prev_val.isNotNull()
-            & next_val.isNotNull()
-            & ((rn - prev_rn) <= F.lit(limit)),
-            F.round(filled + F.lit(1e-9), 4),
+    w_back = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    w_fwd = w.rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    neighbours, filled, scratch = [], {}, ["__rn"]
+    for i, c in enumerate(cols):
+        val, p, n = F.col(c), f"__prev{i}", f"__next{i}"
+        seen = F.when(val.isNotNull(), F.struct(val.alias("v"), rn.alias("rn")))
+        neighbours.append(F.last(seen, ignorenulls=True).over(w_back).alias(p))
+        neighbours.append(F.first(seen, ignorenulls=True).over(w_fwd).alias(n))
+        scratch += [p, n]
+        prev_val, prev_rn = F.col(p)["v"], F.col(p)["rn"]
+        next_val, next_rn = F.col(n)["v"], F.col(n)["rn"]
+        line = prev_val + (next_val - prev_val) * (
+            (rn - prev_rn).cast("double") / (next_rn - prev_rn).cast("double")
         )
-    )
-    return staged.withColumn(out_col, interp).drop("__rn", "__rn_nn")
+        filled[out_col or c] = F.when(val.isNotNull(), val).otherwise(
+            F.when(
+                prev_val.isNotNull()
+                & next_val.isNotNull()
+                & ((rn - prev_rn) <= F.lit(limit)),
+                F.round(line + F.lit(1e-9), 4),
+            )
+        )
+    return staged.select("*", *neighbours).withColumns(filled).drop(*scratch)
 
 
 def interpolate_linear_sql(

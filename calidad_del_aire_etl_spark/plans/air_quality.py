@@ -1,17 +1,23 @@
 """The reference pipeline end-to-end, Spark-native (SURVEY §2 #12).
 
 Reference: Airflow DAG extract ≫ transform ≫ load ≫ validate
-(dags/airflow_dag_calidad_aire.py:441). Here each Airflow task becomes a
-DataFrame→DataFrame stage and the whole flow is ONE lazy Catalyst plan —
-the scheduler's task boundaries (which force CSV materialization between
-tasks in the reference, dag:118/256) disappear; only the final load
-writes anything.
+(dags/airflow_dag_calidad_aire.py:441). Each Airflow task becomes a
+DataFrame→DataFrame stage. extract and the cleaning chain inside
+transform stay lazy, but transform's output has four consumers (the
+hourly parquet, the daily CSV and parquet, and the validate report), so
+transform materializes it ONCE with an eager ``localCheckpoint``: the
+in-memory form of the reference's processed-CSV hand-off between tasks
+(dag:118/256). Every consumer scans the checkpoint instead of re-running
+generate → shuffle → interpolation windows → percentiles → dedup.
+
+The checkpoint blocks live on the executors and are not replicated: a
+lost executor loses them, and a retried ``load``/``validate`` fails
+again instead of recomputing — only a rerun of ``transform`` recovers.
+The blocks are released by the ContextCleaner once the caller drops its
+last reference to the returned DataFrame.
 """
 
 from __future__ import annotations
-
-from dataclasses import dataclass, field
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -24,42 +30,23 @@ from ..sources.generator import generate_air_quality
 POLLUTANTS = ["pm25", "pm10", "no2", "o3", "co", "temperature", "humidity"]
 
 
-@dataclass
-class Pipeline:
-    """A named chain of DataFrame stages (the engine's DAG analog)."""
-
-    name: str
-    stages: list[tuple[str, Callable[[DataFrame], DataFrame]]] = field(default_factory=list)
-
-    def stage(self, name: str):
-        def deco(fn):
-            self.stages.append((name, fn))
-            return fn
-
-        return deco
-
-    def run(self, df: DataFrame) -> DataFrame:
-        for _, fn in self.stages:
-            df = fn(df)
-        return df
-
-
 def extract(spark: SparkSession, num_days: int = 90) -> DataFrame:
     """EXTRACT (dag:40-132): distributed synthetic sensor readings."""
     return generate_air_quality(spark, num_days=num_days)
 
 
 def transform(df: DataFrame) -> DataFrame:
-    """TRANSFORM (dag:138-236): clean + feature-engineer, all lazily.
+    """TRANSFORM (dag:138-236): clean + feature-engineer, materialized once.
 
     Order mirrors the reference: interpolate nulls per station →
     IQR-clip pm25/pm10/no2 → dedup on (ts, station) → AQI → category →
-    temporal features → composite pollution index.
+    temporal features → composite pollution index. All seven columns
+    are interpolated by one plan, and the result is checkpointed eagerly
+    (AQE stays on) so load and validate scan it instead of its lineage.
     """
-    for pol in POLLUTANTS:
-        df = cleaning.interpolate_linear(
-            df, pol, group_cols=["station"], order_cols=["ts"], limit=3
-        )
+    df = cleaning.interpolate_linear(
+        df, POLLUTANTS, group_cols=["station"], order_cols=["ts"], limit=3
+    )
     df = cleaning.iqr_clip(df, ["pm25", "pm10", "no2"], k=3.0)
     df = cleaning.dedup_exact(df, key_cols=["ts", "station"], tiebreak_cols=["pm25"])
     df = df.withColumn("aqi_pm25", aqi_from_pm25(F.col("pm25")))
@@ -69,7 +56,7 @@ def transform(df: DataFrame) -> DataFrame:
         "pollution_index",
         pollution_index(F.col("pm25"), F.col("pm10"), F.col("no2"), F.col("co")),
     )
-    return df
+    return df.localCheckpoint(eager=True)
 
 
 def daily_summary(df: DataFrame) -> DataFrame:
@@ -89,8 +76,7 @@ def daily_summary(df: DataFrame) -> DataFrame:
 
 def load(df: DataFrame, daily: DataFrame, out_dir: str) -> None:
     """LOAD (dag:287-359): snappy parquet partitioned by month + CSV."""
-    writers.write_parquet(df.withColumn("month", F.col("month")), f"{out_dir}/hourly",
-                          partition_by=["month"])
+    writers.write_parquet(df, f"{out_dir}/hourly", partition_by=["month"])
     writers.write_csv(daily, f"{out_dir}/daily_csv")
     writers.write_parquet(daily, f"{out_dir}/daily")
 
@@ -102,16 +88,21 @@ def validate(df: DataFrame) -> DataFrame:
     )
 
 
-def run_full_pipeline(spark: SparkSession, out_dir: str, num_days: int = 30) -> dict:
-    """extract ≫ transform ≫ load ≫ validate, returning the quality report
-    (the reference fails under 1000 rows / warns over 5 % nulls —
-    dag:396-401; same thresholds here)."""
-    raw = extract(spark, num_days=num_days)
-    clean = transform(raw)
-    daily = daily_summary(clean)
-    load(clean, daily, out_dir)
-    report = validate(clean).collect()[0].asDict()
+def check_report(report: dict) -> dict:
+    """The reference's verdict on a validate report (dag:396-401): fail
+    under 1000 rows, warn over 5 % nulls. Returns the report with
+    ``null_warning`` set."""
     if report["total_records"] < 1000:
         raise ValueError("insufficient data for analysis")
     report["null_warning"] = bool(report["null_percentage"] > 5)
     return report
+
+
+def run_full_pipeline(spark: SparkSession, out_dir: str, num_days: int = 30) -> dict:
+    """extract ≫ transform ≫ load ≫ validate, returning the checked
+    quality report (see :func:`check_report`)."""
+    raw = extract(spark, num_days=num_days)
+    clean = transform(raw)
+    daily = daily_summary(clean)
+    load(clean, daily, out_dir)
+    return check_report(validate(clean).collect()[0].asDict())

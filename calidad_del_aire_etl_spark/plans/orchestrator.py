@@ -5,10 +5,14 @@ transform ≫ load ≫ validate, retries=3, daily 08:00).
 Airflow's roles here split cleanly: SCHEDULING belongs to whatever cron
 invokes the job (the reference's own README suggests a 15-minute cron),
 while DEPENDENCY ORDER, RETRIES and FAILURE PROPAGATION are this
-module. Tasks pass values (usually lazy DataFrames) downstream, so a
-multi-task DAG still collapses into few Spark jobs — task boundaries
-do NOT force materialization the way the reference's CSV handoffs
-between Airflow tasks do (dag:118/256).
+module. Tasks pass values (usually DataFrames) downstream in memory,
+so a task boundary forces no materialization by itself. A task whose
+output feeds several consumers materializes it once, as
+``air_quality.transform`` does for load and validate — the in-memory
+form of the reference's CSV hand-offs between Airflow tasks
+(dag:118/256). Such a checkpoint does not survive executor loss, so a
+retry of a downstream task cannot recover from one; the retry policy
+covers failures that a re-run of the same task can fix.
 """
 
 from __future__ import annotations
@@ -137,11 +141,7 @@ def air_quality_dag(spark, out_dir: str, num_days: int = 30) -> Dag:
 
     @dag.task("validate", upstream=["transform"], retries=3)
     def _validate(clean):
-        report = aq.validate(clean).collect()[0].asDict()
-        if report["total_records"] < 1000:  # dag:396
-            raise ValueError("insufficient data for analysis")
-        report["null_warning"] = bool(report["null_percentage"] > 5)  # dag:399
-        return report
+        return aq.check_report(aq.validate(clean).collect()[0].asDict())
 
     return dag
 

@@ -13,12 +13,32 @@ import threading
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+def host_cpus() -> str:
+    """``SPARK_GRAFT_CPUS``, else the cores this process may run on."""
+    if "SPARK_GRAFT_CPUS" in os.environ:
+        return os.environ["SPARK_GRAFT_CPUS"]
+    try:
+        return str(len(os.sched_getaffinity(0)))
+    except AttributeError:  # no affinity API on this platform
+        return str(os.cpu_count() or 1)
+
+
+def host_driver_mem() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else half of physical memory (MemTotal
+    on Linux), capped at the 16g measured below."""
+    if "SPARK_GRAFT_DRIVER_MEM" in os.environ:
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    total_mib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(total_mib // 2, 16 * 1024)}m"
+
+
+DEFAULT_SHUFFLE_PARTITIONS = host_cpus()
 
 
 def get_session(app_name: str = "calidad_del_aire_etl_spark") -> SparkSession:
     """Build (or reuse) a SparkSession with scale-appropriate defaults."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = host_cpus()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -74,9 +94,10 @@ def get_session(app_name: str = "calidad_del_aire_etl_spark") -> SparkSession:
         # corpus_dup_spans_exact measured 48 s @16 GB, 77 s @30 GB,
         # 159 s @32 GB, 125 s @64 GB (GC/pointer-density effects dominate
         # once the shuffle buffers stop spilling early; ≥32 GB also drops
-        # CompressedOops). 16 GB ≈ 0.5 GB per task thread is the measured
-        # sweet spot on this 32-thread/128 GiB box.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # CompressedOops). 16 GB ≈ 0.5 GB per task thread was the measured
+        # sweet spot on a 32-thread/128 GiB box; smaller hosts get half
+        # their RAM (host_driver_mem) so the heap always fits.
+        .config("spark.driver.memory", host_driver_mem())
         # The oracle comparator collects full results via toPandas; at
         # sf1 the 15-min resample grid serializes past the 1g default
         # (1.3 GiB, task results only — operators themselves never

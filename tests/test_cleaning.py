@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from calidad_del_aire_etl_spark.operators import cleaning
@@ -34,6 +35,40 @@ def test_interpolate_respects_limit_and_edges(spark):
     assert got[1] == 1.0 and got[2] == 2.0 and got[3] == 3.0  # within limit
     assert got[4] is None and got[5] is None  # beyond limit of 3
     assert got[8] is None  # trailing edge stays NULL
+
+
+def test_interpolate_many_columns_equals_chained_single_calls(spark):
+    """One multi-column call fills exactly what one call per column
+    fills: interior runs within and beyond the limit, leading and
+    trailing NULLs, each column's gaps in different places, two groups."""
+    a = [None, 1.0, None, None, 4.0, None, None, None, None, 9.0, None]
+    b = [2.0, None, 6.0, None, None, None, None, 5.0, None, None, 1.0]
+    c = [None, None, None, 3.0, 3.5, None, 4.5, None, None, None, None]
+    rows = [("x", _ts(i), a[i], b[i], c[i]) for i in range(len(a))]
+    rows += [("y", _ts(i), c[i], a[i], b[i]) for i in range(len(a))]
+    rows.append(("z", _ts(0), None, 7.0, None))  # one-row group
+    df = spark.createDataFrame(rows, "g string, ts timestamp, a double, b double, c double")
+
+    once = cleaning.interpolate_linear(df, ["a", "b", "c"], ["g"], ["ts"], limit=3)
+    chained = df
+    for col in ("a", "b", "c"):
+        chained = cleaning.interpolate_linear(chained, col, ["g"], ["ts"], limit=3)
+    assert once.columns == df.columns
+    assert once.exceptAll(chained).count() == 0
+    assert chained.exceptAll(once).count() == 0
+    got = {(r["g"], r["ts"].hour): r for r in once.collect()}
+    assert got[("x", 2)]["a"] == 2.0 and got[("x", 0)]["a"] is None
+    assert got[("x", 8)]["a"] is None  # run of 4 > limit 3: its tail stays NULL
+    assert got[("x", 10)]["a"] is None  # trailing NULL
+    assert got[("y", 3)]["c"] == 5.8 and got[("y", 5)]["a"] == 4.0
+
+
+def test_interpolate_out_col_needs_one_column(spark):
+    df = spark.createDataFrame(
+        [("a", _ts(0), 1.0, 2.0)], "g string, ts timestamp, u double, v double"
+    )
+    with pytest.raises(ValueError):
+        cleaning.interpolate_linear(df, ["u", "v"], ["g"], ["ts"], out_col="w")
 
 
 def test_iqr_clip_bounds(spark):

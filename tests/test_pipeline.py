@@ -53,6 +53,63 @@ def test_full_pipeline_runs_and_validates(spark):
         shutil.rmtree(out, ignore_errors=True)
 
 
+def _lazy_transform(df):
+    """Reference for transform: the same chain composed lazily, one
+    interpolation call per column and no checkpoint."""
+    from pyspark.sql import functions as F
+
+    from calidad_del_aire_etl_spark.functions import (
+        aqi_from_pm25,
+        pollution_index,
+        quality_category,
+    )
+    from calidad_del_aire_etl_spark.operators import cleaning, features
+
+    for pol in air_quality.POLLUTANTS:
+        df = cleaning.interpolate_linear(
+            df, pol, group_cols=["station"], order_cols=["ts"], limit=3
+        )
+    df = cleaning.iqr_clip(df, ["pm25", "pm10", "no2"], k=3.0)
+    df = cleaning.dedup_exact(df, key_cols=["ts", "station"], tiebreak_cols=["pm25"])
+    df = df.withColumn("aqi_pm25", aqi_from_pm25(F.col("pm25")))
+    df = df.withColumn("air_quality_category", quality_category(F.col("aqi_pm25")))
+    df = features.with_temporal_features(df, "ts")
+    return df.withColumn(
+        "pollution_index",
+        pollution_index(F.col("pm25"), F.col("pm10"), F.col("no2"), F.col("co")),
+    )
+
+
+def test_transform_equals_lazy_per_column_composition(spark):
+    raw = generate_air_quality(
+        spark, num_days=10, stations=["s1", "s2", "s3"], missing_rate=0.08
+    )
+    clean = air_quality.transform(raw)
+    want = _lazy_transform(raw)
+    assert clean.columns == want.columns
+    assert clean.exceptAll(want).count() == 0
+    assert want.exceptAll(clean).count() == 0
+
+
+def test_transform_consumers_read_the_materialized_relation(spark):
+    """daily_summary and validate plan over transform's checkpoint: no
+    generator Range and no interpolation/dedup Window left in their
+    plans, so load and validate never re-run the cleaning lineage."""
+    clean = air_quality.transform(generate_air_quality(spark, num_days=2))
+    for consumer in (air_quality.daily_summary(clean), air_quality.validate(clean)):
+        plan = consumer._jdf.queryExecution().executedPlan().toString()
+        assert "Range" not in plan and "Window" not in plan, plan
+
+
+def test_check_report_applies_reference_thresholds():
+    ok = air_quality.check_report({"total_records": 1000, "null_percentage": 5.0})
+    assert ok["null_warning"] is False
+    warn = air_quality.check_report({"total_records": 5000, "null_percentage": 5.01})
+    assert warn["null_warning"] is True
+    with pytest.raises(ValueError, match="insufficient data"):
+        air_quality.check_report({"total_records": 999, "null_percentage": 0.0})
+
+
 def test_load_normalizes_ntz_and_nanos_timestamps(spark, tmp_path):
     """registry.load must deliver plain TIMESTAMP regardless of how the
     parquet writer typed `ts`: TIMESTAMP(NANOS) (arrives as bigint under

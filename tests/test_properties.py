@@ -95,6 +95,37 @@ def test_interpolation_fills_between_neighbors(spark, seq):
 
 
 @given(
+    st.lists(
+        st.tuples(
+            st.integers(0, 2),
+            st.one_of(st.none(), st.floats(0, 100, allow_nan=False)),
+            st.one_of(st.none(), st.floats(0, 100, allow_nan=False)),
+        ),
+        min_size=2,
+        max_size=30,
+    ),
+    st.integers(1, 4),
+)
+@SET
+def test_interpolation_many_columns_equals_one_call_per_column(spark, rows, limit):
+    """The multi-column form fills each column exactly as a call for that
+    column alone does, whatever the NULL pattern, group split or limit."""
+    df = spark.createDataFrame(
+        [(i, g, u, v) for i, (g, u, v) in enumerate(rows)],
+        "pos int, g int, u double, v double",
+    )
+    once = cleaning.interpolate_linear(
+        df, ["u", "v"], group_cols=["g"], order_cols=["pos"], limit=limit
+    )
+    chained = df
+    for c in ("u", "v"):
+        chained = cleaning.interpolate_linear(
+            chained, c, group_cols=["g"], order_cols=["pos"], limit=limit
+        )
+    assert sorted(map(tuple, once.collect())) == sorted(map(tuple, chained.collect()))
+
+
+@given(
     st.dictionaries(
         st.integers(0, 400), st.floats(0.1, 100, allow_nan=False), min_size=12, max_size=40
     ),
