@@ -138,13 +138,31 @@ def hub_sample(base: DataFrame, n_hubs: int) -> DataFrame:
     )
 
 
-# Session-scoped index store: built k-NN graphs keyed by (session, user
-# key, build params). A graph-ANN index is build-once-query-many — the
-# registered topk / recall-eval / insert queries all need the same
-# standing index, and rebuilding it per query was ~3× the family's wall
-# (VERDICT r10 next #5). Entries hold eagerly-checkpointed DataFrames;
-# keeping the reference pins the checkpoint blocks for the session.
+# Session-scoped index store: built k-NN graphs keyed by _memo_id. A
+# graph-ANN index is build-once-query-many — the registered topk /
+# recall-eval / insert queries all need the same standing index, and
+# rebuilding it per query was ~3× the family's wall (VERDICT r10 next
+# #5). Entries hold eagerly-checkpointed DataFrames; keeping the
+# reference pins the checkpoint blocks for the session.
 _GRAPH_MEMO: dict = {}
+
+
+def _memo_id(df: DataFrame, memo_key: str | None, *params) -> tuple | None:
+    """Memo identity of a standing index built from ``df``: the session,
+    the caller's key, the build params, and the (path, mtime) of every
+    file ``df`` scans — a table rewritten under the same path gets a new
+    identity, so the memo never serves an index built over its old
+    rows. None (no memoization) when ``memo_key`` is None."""
+    if memo_key is None:
+        return None
+    spark = df.sparkSession
+    conf = spark._jsc.hadoopConfiguration()
+    stamp = []
+    for f in sorted(df.inputFiles()):
+        path = spark._jvm.org.apache.hadoop.fs.Path(f)
+        mtime = path.getFileSystem(conf).getFileStatus(path).getModificationTime()
+        stamp.append((f, mtime))
+    return (spark, memo_key, *params, tuple(stamp))
 
 
 def clear_graph_memo(memo_key: str | None = None) -> int:
@@ -194,12 +212,12 @@ def nndescent_graph(
     ``memo_key``: session-scoped index reuse — pass a stable key (e.g.
     the table path) to persist the built graph for the session, the
     build-once-query-many posture of every real graph-ANN store. The
-    memo is keyed by build params too, so differently-shaped requests
-    never collide; callers that mutate data under the same key must
-    omit it (tests do)."""
-    if memo_key is not None:
-        mk = (df.sparkSession, memo_key, id_col, vec_col, k, iters,
-              n_hubs, sample_k)
+    memo is keyed by build params and by the files ``df`` scans with
+    their mtimes (:func:`_memo_id`), so differently-shaped requests
+    never collide and a rewritten table rebuilds; callers whose data
+    changes without a file changing (in-memory frames) must omit it."""
+    mk = _memo_id(df, memo_key, id_col, vec_col, k, iters, n_hubs, sample_k)
+    if mk is not None:
         hit = _GRAPH_MEMO.get(mk)
         if hit is not None:
             return hit
@@ -262,7 +280,7 @@ def nndescent_graph(
         "cosine",
         "rank",
     )
-    if memo_key is not None:
+    if mk is not None:
         _GRAPH_MEMO[mk] = out
     return out
 
@@ -288,10 +306,10 @@ def _edges_for(g: DataFrame, id_col: str, edges_memo: tuple | None) -> DataFrame
     search walks it, never the raw graph — so a build-once-query-many
     index stores it alongside the graph instead of re-running the
     symmetrizing distinct (one eager job) on every query against the
-    same standing index. ``edges_memo`` is the full memo tuple (None →
-    no memoization, e.g. mutating callers / the streaming sink);
-    eviction rides :func:`clear_graph_memo`'s ``{memo_key}#...`` prefix
-    rule."""
+    same standing index. ``edges_memo`` is the :func:`_memo_id` tuple
+    (None → no memoization, e.g. mutating callers / the streaming
+    sink); eviction rides :func:`clear_graph_memo`'s ``{memo_key}#...``
+    prefix rule."""
     if edges_memo is not None:
         hit = _GRAPH_MEMO.get(edges_memo)
         if hit is not None:
@@ -407,10 +425,8 @@ def graph_beam_topk(
                         n_hubs=n_hubs, memo_key=memo_key)
     edges = _edges_for(
         g, id_col,
-        None if memo_key is None else (
-            df.sparkSession, f"{memo_key}#edges", id_col, vec_col,
-            graph_k, iters, n_hubs,
-        ),
+        _memo_id(df, None if memo_key is None else f"{memo_key}#edges",
+                 id_col, vec_col, graph_k, iters, n_hubs),
     )
     # the final beam state feeds exactly one consumer (the top-k cut):
     # take it as live lineage — the last hop executes inside the
@@ -474,8 +490,8 @@ def nndescent_insert(
     ``memo_key`` is set — the predicate is a Python callable the memo
     cannot hash, and without the tag two calls sharing a memo_key but
     partitioning the corpus differently would silently reuse a standing
-    graph built over the wrong subset. Callers that mutate the data
-    under the same key must omit memo_key (see nndescent_graph).
+    graph built over the wrong subset. Callers whose data changes
+    without a file changing must omit memo_key (see nndescent_graph).
     Evict with :func:`clear_graph_memo`.
     """
     if memo_key is not None and pred_tag is None:
@@ -514,10 +530,8 @@ def nndescent_insert(
                      F.col("nb").alias("neighbor_id"))
         .withColumnRenamed("gid", "id"),
         "id",
-        None if standing_key is None else (
-            df.sparkSession, f"{standing_key}#edges", id_col, vec_col,
-            k, iters, n_hubs,
-        ),
+        _memo_id(df, None if standing_key is None else f"{standing_key}#edges",
+                 id_col, vec_col, k, iters, n_hubs),
     )
     old_adj, new_adj = insert_into_graph(
         old, g_old, new, id_t, k=k, beam=beam, hops=hops, n_hubs=n_hubs,

@@ -1,4 +1,3 @@
-"""Registered query modules, split out of registry.py by family
-(round 10). registry.py imports them in the original section order —
-import THAT, not these modules directly, so registration order (and
-therefore the driver's external sampling window) stays stable."""
+"""Registered query modules, one per operator family. Importing
+``registry`` imports them all; ``registry.queries()`` orders the result
+by the driver-sampling rotation, never by registration."""

@@ -1,37 +1,18 @@
-"""General analytics on TPC-H-ish tables and multimodal — registered queries, split out of registry.py
-(round 10, VERDICT r9 #8: 3.9k lines had become the merge-conflict
-magnet). PURELY MECHANICAL: bodies are byte-identical to the original
-section; registration ORDER is load-bearing (the driver's external
-50-key correctness window samples queries() in registration order), so
-``registry`` imports these modules in the original section sequence and
-each module preserves its section's internal order."""
+"""General analytics on TPC-H-ish tables (Q1/Q3/Q5, top-K, sessions) and
+multimodal columns — registered queries."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession  # noqa: F401
-from pyspark.sql import functions as F  # noqa: F401
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from ..functions import (  # noqa: F401
-    aqi_from_pm25,
-    aqi_sql,
-    quality_category,
-    quality_category_sql,
-    r4,
-)
-from ..operators import aggregates, cleaning, features  # noqa: F401
-from ..registry import (  # noqa: F401
-    _GAPPY_EVENTS_SQL,
-    _gappy_events,
-    load,
-    register,
-)
+from ..operators import general, multimodal
+from ..registry import load, register
 
 # ---------------------------------------------------------------------------
 # General analytics on TPC-H-ish tables (SURVEY §2 #19-24) and multimodal
 # binary columns (#36-37).
 # ---------------------------------------------------------------------------
-
-from ..operators import general, multimodal  # noqa: E402
 
 
 @register("tpch_q1_pricing", general.Q1_SQL.format(cutoff="2001-09-01"))
@@ -179,3 +160,31 @@ def q_mm_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# ---------------------------------------------------------------------------
+# Session profile and multimodal near-dup.
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "session_stats",
+    general.SESSION_STATS_SQL.format(
+        sessionize=general.SESSIONIZE_SQL.format(gap_us=30 * 60 * 1_000_000)
+    ),
+)
+def q_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SURVEY §2 #23s — per-user session distribution profile (counts,
+    events/session, duration, bounce rate) layered on sessionize; AQE
+    keeps it at one fact shuffle."""
+    return general.session_stats(load(spark, sf_dir, "events"), gap_minutes=30)
+
+
+@register("mm_phash_dedup", None)  # fingerprint over binary payload — rows-only
+def q_mm_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SURVEY §2 #37b — multimodal near-dup: 64-bit average-hash
+    fingerprints over binary payloads, 4×16-bit pigeonhole band join
+    (exact for Hamming ≤ 3), JVM-side popcount verification. Rows-only
+    (fingerprint rides a pandas UDF); banding exactness and planted-dup
+    recall are pytest-pinned (tests/test_general_multimodal.py)."""
+    docs = load(spark, sf_dir, "documents", spread=True)
+    payload = multimodal.with_binary_payload(docs.select("doc_id", "text"), "text")
+    return multimodal.phash_near_dup_pairs(payload, "doc_id", max_hamming=3)

@@ -1,30 +1,13 @@
-"""Flagship: the full ETL pipeline end-to-end — registered queries, split out of registry.py
-(round 10, VERDICT r9 #8: 3.9k lines had become the merge-conflict
-magnet). PURELY MECHANICAL: bodies are byte-identical to the original
-section; registration ORDER is load-bearing (the driver's external
-50-key correctness window samples queries() in registration order), so
-``registry`` imports these modules in the original section sequence and
-each module preserves its section's internal order."""
+"""Flagship: the full ETL pipeline end-to-end — registered queries."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession  # noqa: F401
-from pyspark.sql import functions as F  # noqa: F401
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from ..functions import (  # noqa: F401
-    aqi_from_pm25,
-    aqi_sql,
-    quality_category,
-    quality_category_sql,
-    r4,
-)
-from ..operators import aggregates, cleaning, features  # noqa: F401
-from ..registry import (  # noqa: F401
-    _GAPPY_EVENTS_SQL,
-    _gappy_events,
-    load,
-    register,
-)
+from ..functions import aqi_sql, quality_category_sql, r4
+from ..operators import cleaning, features
+from ..registry import _gappy_events, register
 
 # ---------------------------------------------------------------------------
 # Flagship: the full ETL pipeline composed end-to-end (SURVEY §2 #12).
@@ -129,5 +112,3 @@ def q_etl_full_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum((F.col("air_quality_category") == "Good").cast("bigint")).alias("n_good"),
         F.sum(F.hour("ts").isin(7, 8, 9, 17, 18, 19).cast("bigint")).alias("rush_hours"),
     )
-
-

@@ -1,33 +1,14 @@
-"""Second flagship: the LLM training-data pipeline end-to-end — registered queries, split out of registry.py
-(round 10, VERDICT r9 #8: 3.9k lines had become the merge-conflict
-magnet). PURELY MECHANICAL: bodies are byte-identical to the original
-section; registration ORDER is load-bearing (the driver's external
-50-key correctness window samples queries() in registration order), so
-``registry`` imports these modules in the original section sequence and
-each module preserves its section's internal order."""
+"""Second flagship: the LLM training-data pipeline end-to-end, plus skew
+and as-of joins, rollups, trend and upsert — registered queries."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession  # noqa: F401
-from pyspark.sql import functions as F  # noqa: F401
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from ..functions import (  # noqa: F401
-    aqi_from_pm25,
-    aqi_sql,
-    quality_category,
-    quality_category_sql,
-    r4,
-)
-from ..operators import aggregates, cleaning, features  # noqa: F401
-from ..registry import (  # noqa: F401
-    _GAPPY_EVENTS_SQL,
-    _gappy_events,
-    load,
-    register,
-)
-from ..operators import general  # noqa: F401
-from ..operators import dedup  # noqa: F401
-from ..operators import text  # noqa: F401
+from ..functions import r4
+from ..operators import cleaning, dedup, general, text
+from ..registry import load, register
 
 # ---------------------------------------------------------------------------
 # Second flagship: the LLM training-data pipeline composed end-to-end —
@@ -383,5 +364,3 @@ def q_etl_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value", r4(F.col("value") * 2)
     )
     return cleaning.upsert(base, updates, key_cols=["event_id"])
-
-

@@ -1,31 +1,13 @@
-"""General analytics batch 2: TPC-H shapes, range join, funnel — registered queries, split out of registry.py
-(round 10, VERDICT r9 #8: 3.9k lines had become the merge-conflict
-magnet). PURELY MECHANICAL: bodies are byte-identical to the original
-section; registration ORDER is load-bearing (the driver's external
-50-key correctness window samples queries() in registration order), so
-``registry`` imports these modules in the original section sequence and
-each module preserves its section's internal order."""
+"""TPC-H shapes, range join, funnel, percentiles, SCD2 and CDC snapshot
+diff, blocked entity matching — registered queries."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession  # noqa: F401
-from pyspark.sql import functions as F  # noqa: F401
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from ..functions import (  # noqa: F401
-    aqi_from_pm25,
-    aqi_sql,
-    quality_category,
-    quality_category_sql,
-    r4,
-)
-from ..operators import aggregates, cleaning, features  # noqa: F401
-from ..registry import (  # noqa: F401
-    _GAPPY_EVENTS_SQL,
-    _gappy_events,
-    load,
-    register,
-)
-from ..operators import general  # noqa: F401
+from ..operators import general, incremental, tpch2, tpch3
+from ..registry import load, register
 
 # ---------------------------------------------------------------------------
 # General analytics, batch 2: Q6/Q10 shapes, range join, funnel, exact
@@ -58,9 +40,6 @@ def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "orders"),
         load(spark, sf_dir, "lineitem"),
     )
-
-
-from ..operators import tpch2  # noqa: E402
 
 
 @register("tpch_q4_priority", tpch2.Q4_SQL.format(date_lo="1996-01-01", date_hi="1996-04-01"))
@@ -247,3 +226,179 @@ def q_scd2_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     return general.scd2_from_changelog(load(spark, sf_dir, "events"))
 
 
+# ---------------------------------------------------------------------------
+# TPC-H batch 4 (Q2/9/11/13/20/21).
+# ---------------------------------------------------------------------------
+
+
+@register("tpch_q13_custdist", tpch3.Q13_SQL)
+def q_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q13 — customer order-count distribution (LEFT OUTER join
+    preserved zero-order customers, then a distribution groupBy)."""
+    return tpch3.q13_custdist(
+        load(spark, sf_dir, "customer"), load(spark, sf_dir, "orders")
+    )
+
+
+@register("tpch_q21_waiting", tpch3.Q21_SQL)
+def q_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q21 — sole late supplier on multi-supplier finalized
+    orders (Q4's >60-day lateness convention; see tpch3 docstring)."""
+    return tpch3.q21_waiting(
+        load(spark, sf_dir, "supplier"),
+        load(spark, sf_dir, "lineitem"),
+        load(spark, sf_dir, "orders"),
+    )
+
+
+@register("tpch_q9_profit", tpch3.q9_sql("a"))
+def q_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q9 — profit by nation x year (supplycost stand-in: 60% of
+    retail price; DECIMAL fact math, dims broadcast)."""
+    return tpch3.q9_profit(
+        load(spark, sf_dir, "lineitem"),
+        load(spark, sf_dir, "orders"),
+        load(spark, sf_dir, "supplier"),
+        load(spark, sf_dir, "nation"),
+        load(spark, sf_dir, "part"),
+        name_token="a",
+    )
+
+
+@register("tpch_q11_important", tpch3.q11_sql("NATION_2", 0.001))
+def q_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q11 — parts whose supplied value from one nation exceeds a
+    scalar fraction of the total (broadcast scalar threshold)."""
+    return tpch3.q11_important_parts(
+        load(spark, sf_dir, "lineitem"),
+        load(spark, sf_dir, "supplier"),
+        load(spark, sf_dir, "nation"),
+        nation_name="NATION_2",
+        fraction=0.001,
+    )
+
+
+@register("tpch_q20_excess", tpch3.q20_sql("NATION_1", "red", 1996, 50.0))
+def q_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q20 — suppliers in a nation whose shipped volume of
+    name-prefixed parts in a year exceeds a threshold (semi-join)."""
+    return tpch3.q20_excess_suppliers(
+        load(spark, sf_dir, "supplier"),
+        load(spark, sf_dir, "nation"),
+        load(spark, sf_dir, "lineitem"),
+        load(spark, sf_dir, "part"),
+        nation_name="NATION_1",
+        prefix="red",
+        year=1996,
+        min_qty=50.0,
+    )
+
+
+@register("tpch_q2_min_cost", tpch3.q2_sql("EUROPE", 5))
+def q_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q2 — min-cost supplier per part within a region (argmin
+    window over the lineitem-derived part-supplier relation;
+    deterministic pseudo supply cost, see tpch3 docstring)."""
+    return tpch3.q2_min_cost_supplier(
+        load(spark, sf_dir, "part"),
+        load(spark, sf_dir, "supplier"),
+        load(spark, sf_dir, "nation"),
+        load(spark, sf_dir, "region"),
+        load(spark, sf_dir, "lineitem"),
+        region_name="EUROPE",
+        size_mod=5,
+    )
+
+
+# ---------------------------------------------------------------------------
+# SCD2 apply, CDC snapshot diff, blocked entity matching.
+# ---------------------------------------------------------------------------
+
+
+@register("scd2_apply_incremental", general.SCD2_SQL)
+def q_scd2_apply_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SURVEY §2 #3e — incremental SCD2 apply: history built from
+    events before 2024-01-24, then the remaining days applied as a
+    change batch. The oracle is the FULL REBUILD over all events —
+    hash-parity proves apply∘build ≡ rebuild, closed rows never
+    reprocessed (untouched keys stream through an anti-join)."""
+    ev = load(spark, sf_dir, "events")
+    cutoff = F.lit("2024-01-24").cast("timestamp")
+    before = ev.filter(F.col("ts") < cutoff)
+    after = ev.filter(F.col("ts") >= cutoff)
+    return general.scd2_apply(general.scd2_from_changelog(before), after)
+
+
+# Two deterministic "versions" of orders derived from the same table so
+# the diff has all three change classes: v_old drops orderkey%17==3
+# (those become `added`), v_new drops %19==5 (`deleted`) and reprices
+# %7==0 rows by +5 % (`changed`).
+_SNAP_OLD_SQL = (
+    "SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderkey % 17 <> 3"
+)
+
+
+_SNAP_NEW_SQL = (
+    "SELECT o_orderkey, CASE WHEN o_orderkey % 7 = 0 "
+    "THEN ROUND(o_totalprice * 1.05 + 1e-9, 2) ELSE o_totalprice END "
+    "AS o_totalprice FROM orders WHERE o_orderkey % 19 <> 5"
+)
+
+
+@register(
+    "snapshot_diff_orders",
+    incremental.snapshot_diff_sql(
+        _SNAP_OLD_SQL, _SNAP_NEW_SQL, ["o_orderkey"], ["o_totalprice"]
+    ),
+)
+def q_snapshot_diff_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SURVEY §2 #14c — keyed snapshot diff (CDC reconciliation): which
+    rows were added / deleted / changed between two versions of the
+    orders table (operators/incremental.py:snapshot_diff). One full
+    outer sort-merge join; both derived snapshots share the scan and
+    Catalyst reuses the exchange."""
+    orders = load(spark, sf_dir, "orders")
+    v_old = orders.where(F.col("o_orderkey") % 17 != 3).select(
+        "o_orderkey", "o_totalprice"
+    )
+    v_new = orders.where(F.col("o_orderkey") % 19 != 5).select(
+        "o_orderkey",
+        F.when(
+            F.col("o_orderkey") % 7 == 0,
+            F.round(F.col("o_totalprice") * 1.05 + F.lit(1e-9), 2),
+        )
+        .otherwise(F.col("o_totalprice"))
+        .alias("o_totalprice"),
+    )
+    return incremental.snapshot_diff(
+        v_old, v_new, ["o_orderkey"], ["o_totalprice"]
+    )
+
+
+@register(
+    "er_blocked_match",
+    general.blocked_fuzzy_match_sql(
+        "customer", "supplier",
+        ["c_nationkey"], ["s_nationkey"],
+        "c_custkey", "s_suppkey", "c_name", "s_name",
+        max_dist=12,
+    ),
+)
+def q_er_blocked_match(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SURVEY §2 #24b — blocked fuzzy entity matching (record linkage):
+    customers linked to same-nation suppliers by Levenshtein distance,
+    best match per customer. Candidate pairs exist only inside the
+    blocking-key equi-join — the operator never cross-joins, and the
+    block key is the caller's cardinality contract (see
+    operators/general.py:blocked_fuzzy_match)."""
+    # spread=True: the probe side fans out |block| candidates per row
+    # through the Levenshtein scorer — a 1-file scan would run the whole
+    # candidate stream in ONE task (measured 3.8 s; 32-way ~1.1 s)
+    cust = load(spark, sf_dir, "customer", spread=True).withColumnRenamed(
+        "c_nationkey", "__nk"
+    )
+    supp = load(spark, sf_dir, "supplier").withColumnRenamed("s_nationkey", "__nk")
+    return general.blocked_fuzzy_match(
+        cust, supp, ["__nk"],
+        "c_custkey", "s_suppkey", "c_name", "s_name", max_dist=12,
+    )

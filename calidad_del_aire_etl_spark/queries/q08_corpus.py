@@ -1,39 +1,19 @@
-"""Corpus-preparation operators (SURVEY §2 #44-49) — registered queries, split out of registry.py
-(round 10, VERDICT r9 #8: 3.9k lines had become the merge-conflict
-magnet). PURELY MECHANICAL: bodies are byte-identical to the original
-section; registration ORDER is load-bearing (the driver's external
-50-key correctness window samples queries() in registration order), so
-``registry`` imports these modules in the original section sequence and
-each module preserves its section's internal order."""
+"""Corpus-preparation operators (SURVEY §2 #44-49): chunking, PII, n-grams,
+sampling, LM scoring, quality rules, span dedup, BPE — registered queries."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession  # noqa: F401
-from pyspark.sql import functions as F  # noqa: F401
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from ..functions import (  # noqa: F401
-    aqi_from_pm25,
-    aqi_sql,
-    quality_category,
-    quality_category_sql,
-    r4,
-)
-from ..operators import aggregates, cleaning, features  # noqa: F401
-from ..registry import (  # noqa: F401
-    _GAPPY_EVENTS_SQL,
-    _gappy_events,
-    load,
-    register,
-)
-from ..operators import general  # noqa: F401
+from ..operators import corpus
+from ..registry import load, register
 
 # ---------------------------------------------------------------------------
 # Corpus-preparation operators for LLM training data (SURVEY §2 #44-49):
 # chunking, packing, PII scrub, n-gram stats, repetition filter,
 # stratified sampling.
 # ---------------------------------------------------------------------------
-
-from ..operators import corpus  # noqa: E402
 
 
 @register(
@@ -158,7 +138,6 @@ def q_corpus_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "lang", "source")
 
 
-
 # Lloyd's k-means IS oracle-able for fixed iterations: unroll the 5
 # assign/recompute rounds as chained CTEs. Distances fold sequentially
 # like the Spark aggregate(zip_with(...)); per-dimension centroid AVG
@@ -281,33 +260,258 @@ def q_embed_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ann.pca_project(emb, "vec_id", "embedding", k=4)
 
 
-from ..operators import sketches  # noqa: E402
+# ---------------------------------------------------------------------------
+# Sampling, LM scoring, quality rules, span dedup, BPE.
+# ---------------------------------------------------------------------------
 
 
 @register(
-    "hll_rollup_merge",
-    sketches.hll_reaggregate_sql("events", "ts", "event_type", "user_id", lg_k=12),
+    "corpus_weighted_sample",
+    corpus.weighted_sample_topk_sql(
+        "documents", "doc_id", "octet_length(encode(text))", k=50
+    ),
 )
-def q_hll_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SURVEY §2 #15d — mergeable HLL distinct counting: daily
-    (date, event_type) register sets MAX-merged into month×type
-    estimates without rescanning the fact (tolerance vs exact
-    pytest-asserted in tests/test_sketches.py).
-
-    Promoted from rows-only to FULL hash parity (r13, VERDICT r12 #7):
-    the from-scratch HLL's registers and estimator are pure
-    integer/literal-identical arithmetic (operators/sketches.py), so
-    the DuckDB twin replays the whole sketch bit-for-bit — Datasketches
-    bytes no longer gate this key."""
-    ev = load(spark, sf_dir, "events")
-    return sketches.hll_reaggregate(ev, "ts", "event_type", "user_id", lg_k=12)
+def q_corpus_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Priority sampling (Duffield-Lund-Thorup): deterministic
+    length-weighted sample-without-replacement of 50 docs — long docs
+    proportionally likelier, md5-derived priorities, TakeOrdered plan
+    (per-partition top-k, no global sort)."""
+    docs = load(spark, sf_dir, "documents", spread=True)
+    return corpus.weighted_sample_topk(
+        docs, "doc_id", F.octet_length(F.col("text")), k=50
+    )
 
 
-@register("sketch_profile", None)  # sketch internals differ per engine — rows-only
-def q_sketch_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SURVEY §2 #15c — HLL++ distinct + approx-percentile sketch profile
-    (the 100 TB path for cardinality/quantiles; accuracy vs exact is
-    asserted in tests/test_general2.py)."""
-    return general.sketch_profile(load(spark, sf_dir, "events"))
+@register(
+    "corpus_domain_quota",
+    corpus.domain_quota_sample_sql(
+        "documents", "doc_id", "source", quota=10, cols="doc_id, source"
+    ),
+)
+def q_corpus_domain_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-domain quota: cap every source at 10 docs, kept subset chosen
+    by deterministic md5 order (crawl balancing — no hot-domain
+    dominance, no head-of-file bias, stable across reruns)."""
+    docs = load(spark, sf_dir, "documents", spread=True)
+    return corpus.domain_quota_sample(docs, "doc_id", "source", quota=10).select(
+        "doc_id", "source"
+    )
 
 
+@register(
+    "corpus_unigram_logprob",
+    corpus.unigram_logprob_sql("documents", "doc_id", "text"),
+)
+def q_corpus_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SURVEY §2 #49h — CCNet-style unigram-LM quality score; the
+    Zipf-head token join broadcasts (skew guard), only the long tail
+    shuffles."""
+    docs = load(spark, sf_dir, "documents", spread=True)
+    return corpus.unigram_logprob(docs, "doc_id", "text")
+
+
+@register(
+    "corpus_split_decontaminated",
+    corpus.split_decontaminated_sql("documents", "doc_id", "text"),
+)
+def q_corpus_split_decontaminated(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SURVEY §2 #49i — hash-deterministic train/test split with
+    verbatim n-gram leakage flags; the train side never shuffles."""
+    docs = load(spark, sf_dir, "documents", spread=True)
+    return corpus.split_decontaminated(docs, "doc_id", "text")
+
+
+@register(
+    "corpus_sentence_dedup",
+    corpus.sentence_dedup_sql("documents", "doc_id", "text", max_df=3),
+)
+def q_corpus_sentence_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SURVEY §2 #49j — CCNet-style sentence-level boilerplate removal:
+    drop sentences appearing in > 3 distinct docs, reassemble documents
+    in order. Broadcast anti-join on the small boilerplate set — the
+    corpus never shuffles on sentence text."""
+    docs = load(spark, sf_dir, "documents", spread=True)
+    return corpus.sentence_dedup(docs, "doc_id", "text", max_df=3)
+
+
+@register(
+    "corpus_dsir_weights",
+    corpus.dsir_weights_sql(
+        "documents", "doc_id", "text",
+        "source IN ('src0','src1','src2','src3')",
+        head_size=1024,
+    ),
+)
+def q_corpus_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SURVEY §2 #49c — DSIR importance weights (Xie et al. 2023): score
+    every document by log p_target / p_background under two Zipf-head
+    bag-of-words LMs, target = the trusted source set; resampling by
+    exp(weight) shifts the corpus mixture toward the target domain
+    without training a classifier. One explode pass + one head
+    aggregate; the LM ratio table broadcasts (operators/corpus.py:
+    dsir_weights)."""
+    docs = load(spark, sf_dir, "documents", spread=True)
+    return corpus.dsir_weights(
+        docs, "doc_id", "text",
+        F.col("source").isin("src0", "src1", "src2", "src3"),
+        head_size=1024,
+    )
+
+
+@register(
+    "corpus_gopher_rules",
+    corpus.gopher_rules_sql("documents", "text", "source"),
+)
+def q_corpus_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SURVEY §2 #49l — Gopher document-quality rules (Rae et al. 2021)
+    with per-source pass rates and per-rule fail counts
+    (operators/corpus.py:gopher_rules). All seven rules are JVM
+    higher-order-function expressions over the split arrays — no UDF,
+    no text shuffle; the one exchange carries a row per source."""
+    docs = load(spark, sf_dir, "documents", spread=True)
+    return corpus.gopher_rules(docs, "text", "source")
+
+
+@register(
+    "corpus_perplexity_buckets",
+    corpus.perplexity_buckets_sql("documents", "doc_id", "text", "lang"),
+)
+def q_corpus_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SURVEY §2 #49m — CCNet head/middle/tail perplexity buckets per
+    language (Wenzek et al. 2020): tercile documents within each lang
+    by unigram mean log-probability and report bucket sizes and score
+    ranges (operators/corpus.py:perplexity_buckets). Rides
+    unigram_logprob's broadcast-head/shuffled-tail token join."""
+    docs = load(spark, sf_dir, "documents", spread=True)
+    return corpus.perplexity_buckets(docs, "doc_id", "text", "lang")
+
+
+@register(
+    "corpus_perplexity_buckets_approx",
+    corpus.perplexity_buckets_approx_sql("documents", "doc_id", "text", "lang"),
+)
+def q_corpus_perplexity_buckets_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SURVEY §2 #49m (scale variant) — histogram-cut head/middle/tail
+    perplexity split (operators/corpus.py:perplexity_buckets_approx):
+    the 100 TB path corpus_perplexity_buckets' docstring promises, as a
+    registered query. 512 fixed-width score bins per language replace
+    the exact per-language NTILE over doc-grain rows — after the
+    unigram score, the whole plan is an aggregate tree (per-bin
+    histogram, a <= 512-row window, a 3-row rollup); no doc-grain sort
+    or re-join. Deterministic, so the DuckDB twin hash-matches; a
+    tolerance pytest pins bucket sizes within bin-straddle of exact
+    terciles."""
+    docs = load(spark, sf_dir, "documents", spread=True)
+    return corpus.perplexity_buckets_approx(docs, "doc_id", "text", "lang")
+
+
+@register(
+    "corpus_dup_spans_exact",
+    corpus.dup_spans_exact_sql("documents", "doc_id", "text", span_len=32),
+)
+def q_corpus_dup_spans_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SURVEY §2 #49b (full-coverage variant) — duplicated-substring
+    profile at stride 1 (operators/corpus.py:dup_spans_exact): the
+    exact span-level signal of Lee et al. 2022, catching duplicates the
+    strided corpus_dup_spans misses when occurrences start at different
+    offsets modulo the stride. Codegen'd md5-prefix hash per position,
+    one exchange on the span hash with a min/max window duplicate flag,
+    linear in corpus bytes, self-join-free."""
+    docs = load(spark, sf_dir, "documents", spread=True)
+    return corpus.dup_spans_exact(docs, "doc_id", "text", span_len=32)
+
+
+@register(
+    "corpus_bpe_pair_counts",
+    corpus.bpe_pair_counts_sql("documents", "text", k=50),
+)
+def q_corpus_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SURVEY §2 #47b — BPE merge-step pair statistics (Sennrich et al.
+    2016): corpus-wide adjacent character-pair frequencies (with
+    end-of-word marker), weighted by word frequency — the first-merge
+    decision of a distributed tokenizer trainer. Tokens collapse to the
+    Heaps'-bounded distinct-word relation before any pair explosion."""
+    docs = load(spark, sf_dir, "documents", spread=True)
+    return corpus.bpe_pair_counts(docs, "text", k=50)
+
+
+@register(
+    "corpus_span_dedup_emit",
+    corpus.span_dedup_emit_sql("documents", "doc_id", "text", span_len=32, drop_frac=0.3),
+)
+def q_corpus_span_dedup_emit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SURVEY §2 #49g3 — the REMOVAL step of Lee et al. 2022 span dedup
+    (VERDICT r9 #7): per-doc duplicated-CHAR fraction (interval union of
+    the stride-1 duplicated spans — tighter than the span fraction) and
+    the emit action (drop > 0.3, clip if any dup chars, else keep) — the
+    decision analog of dedup_keep_best, built on the proven
+    corpus_dup_spans_exact machinery. All-integer interval arithmetic,
+    so both engines agree exactly; planted-doc pytest in
+    tests/test_round10_ops.py."""
+    docs = load(spark, sf_dir, "documents", spread=True)
+    return corpus.span_dedup_emit(docs, "doc_id", "text", span_len=32, drop_frac=0.3)
+
+
+@register(
+    "corpus_bpe_merges",
+    corpus.bpe_merges_sql("documents", "text", n_merges=6),
+)
+def q_corpus_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SURVEY §2 #47d — the BPE trainer LOOP (Sennrich et al. 2016;
+    VERDICT r9 #6): 6 iterated merge decisions over the Heaps'-bounded
+    distinct-word relation, extending corpus_bpe_pair_counts (the first
+    decision) into the merge-table artifact a tokenizer ships with.
+    Per step: combiner-backed pair count over the vocab relation, ONE
+    argmax row to the driver (codebook discipline), literal-replace
+    broadcast back. Oracle = the loop unrolled into per-step CTEs;
+    pytest pins the loop against a reference BPE on a toy corpus."""
+    docs = load(spark, sf_dir, "documents", spread=True)
+    return corpus.bpe_merges(docs, "text", n_merges=6)
+
+
+@register(
+    "corpus_vocab_coverage",
+    corpus.vocab_coverage_sql("documents", "text", top_ns=(10, 50, 200)),
+)
+def q_corpus_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SURVEY §2 #47c — top-N vocabulary token coverage / OOV-rate curve
+    (tokenizer vocab sizing): combiner-backed word count, TakeOrdered
+    top-max(N) (no full vocabulary sort), all remaining math on <= 200
+    rows with the corpus total riding a 1-row broadcast."""
+    docs = load(spark, sf_dir, "documents", spread=True)
+    return corpus.vocab_coverage(docs, "text", top_ns=(10, 50, 200))
+
+
+@register(
+    "corpus_bpe_encode",
+    corpus.bpe_encode_stats_sql("documents", "doc_id", "text", n_merges=6),
+)
+def q_corpus_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SURVEY §2 #47e — the ENCODER side of the BPE family: apply the
+    trained merge table to every document and report per-doc token
+    statistics (tokens/word, chars/token) — the sequence-length readout
+    a vocab decision is actually made on. Encoding is k chained literal
+    replaces in ONE projection over the corpus (all-JVM, no UDF); the
+    trainer's merges arrive as collected literals (codebook
+    discipline), so encoder and trainer share the greedy scan by
+    construction."""
+    docs = load(spark, sf_dir, "documents", spread=True)
+    return corpus.bpe_encode_stats(docs, "doc_id", "text", n_merges=6)
+
+
+@register(
+    "corpus_kn_bigram_logprob",
+    corpus.kn_bigram_logprob_sql("documents", "doc_id", "text"),
+)
+def q_corpus_kn_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SURVEY §2 #49n — per-document mean log2 probability under an
+    interpolated Kneser-Ney BIGRAM LM trained on the corpus itself
+    (operators/corpus.py:kn_bigram_logprob): the word-ORDER-aware step
+    up from unigram_logprob's CCNet filter (scrambled/template spam
+    built from common words scores low here, not there). Bigrams are
+    built map-side from two shifted array slices (no positional
+    self-join); the model is the Heaps-bounded distinct-bigram
+    relation; the score join broadcasts the 4096-bigram Zipf head so
+    only the tiny-fan-out tail shuffles."""
+    docs = load(spark, sf_dir, "documents", spread=True)
+    return corpus.kn_bigram_logprob(docs, "doc_id", "text")

@@ -1,32 +1,13 @@
-"""SQL API surface, k-means, frame sampling, cogroup — registered queries, split out of registry.py
-(round 10, VERDICT r9 #8: 3.9k lines had become the merge-conflict
-magnet). PURELY MECHANICAL: bodies are byte-identical to the original
-section; registration ORDER is load-bearing (the driver's external
-50-key correctness window samples queries() in registration order), so
-``registry`` imports these modules in the original section sequence and
-each module preserves its section's internal order."""
+"""SQL API surface, k-means, frame sampling, cogroup — registered queries."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession  # noqa: F401
-from pyspark.sql import functions as F  # noqa: F401
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from ..functions import (  # noqa: F401
-    aqi_from_pm25,
-    aqi_sql,
-    quality_category,
-    quality_category_sql,
-    r4,
-)
-from ..operators import aggregates, cleaning, features  # noqa: F401
-from ..registry import (  # noqa: F401
-    _GAPPY_EVENTS_SQL,
-    _gappy_events,
-    load,
-    register,
-)
-from ..operators import multimodal  # noqa: F401
-from ..operators import text  # noqa: F401
+from ..functions import r4
+from ..operators import cleaning, multimodal, text
+from ..registry import _gappy_events, load, register
 
 # ---------------------------------------------------------------------------
 # SQL API surface: the engine is reachable as plain ANSI SQL over
@@ -427,5 +408,3 @@ def q_dash_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.withColumn("__arr", arr)
         .select("event_id", "user_id", r4(F.expr(med)).alias("rolling_median"))
     )
-
-

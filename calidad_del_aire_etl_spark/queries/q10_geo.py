@@ -1,31 +1,13 @@
-"""Geospatial-lite: nearest station, close pairs — registered queries, split out of registry.py
-(round 10, VERDICT r9 #8: 3.9k lines had become the merge-conflict
-magnet). PURELY MECHANICAL: bodies are byte-identical to the original
-section; registration ORDER is load-bearing (the driver's external
-50-key correctness window samples queries() in registration order), so
-``registry`` imports these modules in the original section sequence and
-each module preserves its section's internal order."""
+"""Geospatial-lite: nearest station, close pairs — registered queries."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession  # noqa: F401
-from pyspark.sql import functions as F  # noqa: F401
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from ..functions import (  # noqa: F401
-    aqi_from_pm25,
-    aqi_sql,
-    quality_category,
-    quality_category_sql,
-    r4,
-)
-from ..operators import aggregates, cleaning, features  # noqa: F401
-from ..registry import (  # noqa: F401
-    _GAPPY_EVENTS_SQL,
-    _gappy_events,
-    load,
-    register,
-)
-from ..operators import corpus  # noqa: F401
+from ..functions import r4
+from ..operators import corpus, general
+from ..registry import load, register
 
 # ---------------------------------------------------------------------------
 # Geospatial-lite: nearest-station assignment (sensor networks are
@@ -138,3 +120,27 @@ def q_corpus_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@register(
+    "geo_close_pairs",
+    f"""
+    SELECT a.user_id AS id_a, b.user_id AS id_b,
+           ROUND(111.32 * sqrt((a.ulat - b.ulat) * (a.ulat - b.ulat)
+                 + (a.ulon - b.ulon) * (a.ulon - b.ulon)) + 1e-9, 4) AS dist_km
+    FROM ({_user_coords_sql()}) a JOIN ({_user_coords_sql()}) b
+      ON a.user_id < b.user_id
+    WHERE 111.32 * sqrt((a.ulat - b.ulat) * (a.ulat - b.ulat)
+                + (a.ulon - b.ulon) * (a.ulon - b.ulon)) <= 10.0
+    """,
+)
+def q_geo_close_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SURVEY §2 #24g — user pairs within 10 km via grid-cell bucketing
+    (3×3 neighbor replication, per-cell-bounded quadratic term); the
+    oracle is the naive all-pairs theta join — identical output proves
+    the banding is exact."""
+    ev = load(spark, sf_dir, "events")
+    users = ev.select("user_id").distinct().select(
+        "user_id",
+        (F.lit(40.4) + (F.col("user_id") % 200) * 0.01 - 1.0).alias("ulat"),
+        (F.lit(-3.7) + ((F.col("user_id") * 7) % 200) * 0.01 - 1.0).alias("ulon"),
+    )
+    return general.geo_close_pairs(users, "user_id", "ulat", "ulon", max_km=10.0)

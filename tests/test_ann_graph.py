@@ -236,3 +236,41 @@ def test_insert_memo_requires_pred_tag_and_keys_by_it(spark):
     assert not any(
         str(k[1]).startswith("memo-test") for k in ann_graph._GRAPH_MEMO
     )
+
+
+def test_graph_memo_rebuilds_after_table_rewrite(spark, tmp_path):
+    """The registered graph-ANN queries memoize the standing index per
+    sf_dir. Rewriting embeddings.parquet under the same sf_dir must
+    build a new index, not serve the one built over the old rows: the
+    answer after the rewrite equals a cold (memo-cleared) run."""
+    import numpy as np
+    import pandas as pd
+
+    from calidad_del_aire_etl_spark import registry
+
+    sf_dir = str(tmp_path)
+    vecs = np.random.default_rng(0).normal(size=(80, 8)).astype("float32")
+
+    def write(v):
+        pd.DataFrame({
+            "vec_id": np.arange(len(v), dtype="int64"),
+            "embedding": list(v),
+            "label": np.zeros(len(v), dtype="int32"),
+        }).to_parquet(tmp_path / "embeddings.parquet")
+
+    def topk():
+        q = registry.queries()["ann_graph_topk"]
+        return sorted(tuple(r) for r in q(spark, sf_dir).collect())
+
+    try:
+        write(vecs)
+        before = topk()
+        # same ids, every vector moved to another id: the old graph's
+        # adjacency no longer describes these rows
+        write(np.roll(vecs, 23, axis=0))
+        after = topk()
+        ann_graph.clear_graph_memo(f"{sf_dir}/embeddings")
+        assert after == topk()
+        assert after != before
+    finally:
+        ann_graph.clear_graph_memo(f"{sf_dir}/embeddings")

@@ -160,108 +160,86 @@ def test_cli_front_door(spark, tmp_path):
 def test_driver_sample_window_rotates_to_fresh_queries():
     """The external correctness gate hash-checks only the FIRST 50 keys
     of queries(); rounds 1-4 proved an unrotated window leaves ~2/3 of
-    the registry without external evidence. Pin the rotation invariant
-    (post-r6, with the refresh slice): the leading window is every
-    never-driver-sampled key (up to 50 - _REFRESH_SLICE, oracle-backed
-    first), then _REFRESH_SLICE stalest previously-sampled keys, then
-    — once the fresh pool is short — more stalest-first seen keys.
-    Reordering loses nothing: queries() stays a permutation of _SPECS."""
+    the registry without external evidence. Pin the rotation invariant:
+    every never-driver-sampled key leads (oracle-backed first), then the
+    previously-sampled keys, ordered stalest-round-first. Reordering
+    loses nothing: queries() stays a permutation of _SPECS."""
     from calidad_del_aire_etl_spark import registry
 
     q = list(registry.queries())
     oracles = registry.oracle_sql()
-    # force-hoisted re-check keys (VERDICT r12 #2) lead the window,
-    # ahead of even the fresh block; strip them before checking the
-    # rotation invariants on the rest
-    pinned = list(registry._PINNED_FOR_RECHECK)
-    assert q[:len(pinned)] == pinned
-    q = q[len(pinned):]
-    fresh = [
-        s.name for s in registry._SPECS
-        if s.name not in registry._DRIVER_SAMPLED
-    ]
-    n_lead = min(50 - registry._REFRESH_SLICE, len(fresh))
-    lead = q[:n_lead]
-    assert all(k not in registry._DRIVER_SAMPLED for k in lead)
+    last_round = registry.last_sampled_round()
+    fresh = [s.name for s in registry._SPECS if s.name not in last_round]
+    lead = q[:len(fresh)]
+    assert sorted(lead) == sorted(fresh)
     # oracle-backed fresh keys come before rows-only fresh keys
     kinds = [k in oracles for k in lead]
     assert kinds == sorted(kinds, reverse=True)
-    # everything after the fresh block (within the 50-key window) was
-    # previously sampled, ordered stalest-round-first
-    last_round = {}
-    for rnd, sampled in enumerate(registry._DRIVER_SAMPLED_BY_ROUND):
-        for name in sampled:
-            last_round[name] = rnd
-    tail = q[len(fresh): 50] if len(fresh) < 50 else q[n_lead:50]
-    rounds = [last_round[k] for k in tail]
-    assert all(k in registry._DRIVER_SAMPLED for k in tail)
+    # everything after the fresh block was previously sampled, ordered
+    # stalest-round-first
+    rounds = [last_round[k] for k in q[len(fresh):]]
     assert rounds == sorted(rounds)
-    # the refresh slice is reserved even while fresh keys remain
-    if len(fresh) >= 50:
-        refresh = q[n_lead: n_lead + registry._REFRESH_SLICE]
-        assert all(k in registry._DRIVER_SAMPLED for k in refresh)
     # the rotation is a permutation: every registered spec is present
     # exactly once, and every oracle key is a registered query
-    q_full = pinned + q
-    assert sorted(q_full) == sorted({s.name for s in registry._SPECS})
-    assert len(q_full) == len({s.name for s in registry._SPECS})
-    assert set(oracles) <= set(q_full)
+    names = {s.name for s in registry._SPECS}
+    assert sorted(q) == sorted(names)
+    assert len(q) == len(names)
+    assert set(oracles) <= set(q)
 
 
-def test_ingest_correctness_tool_is_idempotent():
-    """tools/ingest_correctness.py is the mechanical end-of-round step
-    that appends each round's driver sample to _DRIVER_SAMPLED_BY_ROUND
-    (VERDICT r6 #1: it was forgotten by hand two rounds running). Pin:
-    already-ingested rounds are a no-op, and every committed
-    CORRECTNESS_r{N}.json's keys are present in the registry table.
-
-    Hermetic by construction (VERDICT r7/r8 gate #1b): only the
-    ``check=True`` dry-run path runs here, so this test can NEVER write
-    registry.py — a freshly-dropped, not-yet-ingested artifact fails the
-    assertion (telling the builder to run the tool) instead of mutating
-    source mid-test-run. The write path is additionally pinned against a
-    tempdir copy of the registry."""
-    import importlib.util
+def test_driver_order_derived_from_verdict_files(tmp_path):
+    """The rotation is derived from CORRECTNESS_r<N>.json files alone:
+    a key counts at the LATEST round that sampled it, fresh keys lead
+    (oracle-backed before rows-only), then stalest round first, with
+    rows-only after oracle-backed and name breaking ties within a round
+    — whatever order the specs were registered in."""
     import json
-    import shutil
-    import tempfile
-    from pathlib import Path
+    import random
 
+    from calidad_del_aire_etl_spark.registry import (
+        QuerySpec,
+        driver_order,
+        last_sampled_round,
+    )
+
+    verdicts = {
+        "CORRECTNESS_r03.json": ["t2", "a_old", "resampled", "a_rows_r3", "t1"],
+        "CORRECTNESS_r05.json": ["mid"],
+        "CORRECTNESS_r12.json": ["resampled"],
+    }
+    for fname, keys in verdicts.items():
+        (tmp_path / fname).write_text(json.dumps(dict.fromkeys(keys, {})))
+    (tmp_path / "CORRECTNESS_rX.json").write_text(json.dumps({"stray": {}}))
+
+    assert last_sampled_round(tmp_path) == {
+        "t2": 3, "a_old": 3, "a_rows_r3": 3, "t1": 3, "mid": 5, "resampled": 12,
+    }
+    rows_only = {"a_fresh_rows", "a_rows_r3"}
+    specs = [
+        QuerySpec(n, None, None if n in rows_only else f"SELECT '{n}'")
+        for n in ["resampled", "t2", "a_fresh_rows", "mid", "z_fresh",
+                  "a_rows_r3", "a_old", "m_fresh", "t1"]
+    ]
+    expected = [
+        "m_fresh", "z_fresh", "a_fresh_rows",   # fresh: oracle, then rows-only
+        "a_old", "t1", "t2", "a_rows_r3",       # round 3: tie broken by name
+        "mid",                                  # round 5
+        "resampled",                            # r3 and r12 → counts at r12
+    ]
+    rng = random.Random(7)
+    for _ in range(5):
+        rng.shuffle(specs)
+        order = [s.name for s in driver_order(specs, tmp_path)]
+        assert order == expected
+        assert sorted(order) == sorted(s.name for s in specs)
+
+
+def test_committed_verdict_keys_are_registered_queries():
+    """Every key the external gate ever sampled names a registered query
+    — a renamed or dropped query would otherwise fall out of the
+    rotation's stale block unnoticed."""
     from calidad_del_aire_etl_spark import registry
 
-    repo = Path(__file__).resolve().parent.parent
-    spec = importlib.util.spec_from_file_location(
-        "ingest_correctness", repo / "tools" / "ingest_correctness.py")
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
-    files = sorted(repo.glob("CORRECTNESS_r*.json"))
-    assert files, "driver correctness artifacts missing"
-    before = mod.REGISTRY.read_text()
-    for f in files:
-        assert mod.ingest(str(f), check=True) is False, (
-            f"{f.name} not ingested — run "
-            f"`python tools/ingest_correctness.py {f.name}`")
-        keys = set(json.loads(f.read_text()))
-        assert keys <= registry._DRIVER_SAMPLED
-    assert mod.REGISTRY.read_text() == before, "dry-run mutated registry.py"
-
-    # pin the WRITE path too, against a tempdir copy: ingesting a novel
-    # round modifies the copy exactly once, then no-ops on re-run.
-    with tempfile.TemporaryDirectory() as td:
-        reg_copy = Path(td) / "registry.py"
-        shutil.copy(mod.REGISTRY, reg_copy)
-        art = Path(td) / "CORRECTNESS_r99.json"
-        art.write_text(json.dumps({"etl_aqi": {"match": True},
-                                   "zz_novel_key_r99": {"match": True}}))
-        orig_registry = mod.REGISTRY
-        try:
-            mod.REGISTRY = reg_copy
-            assert mod.ingest(str(art), check=True) is True
-            assert reg_copy.read_text() == before, "check mode wrote the copy"
-            assert mod.ingest(str(art)) is True
-            assert "zz_novel_key_r99" in reg_copy.read_text()
-            assert mod.ingest(str(art)) is False  # idempotent
-        finally:
-            mod.REGISTRY = orig_registry
-    assert mod.REGISTRY.read_text() == before
+    sampled = registry.last_sampled_round()
+    assert sampled, "driver correctness artifacts missing"
+    assert set(sampled) <= {s.name for s in registry._SPECS}
